@@ -407,6 +407,33 @@ def text_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def mllib_minhash_candidates(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) candidate pairs from MLlib MinHashLSH
+    over whole-doc lower-cased token sets (HashingTF binary vectors),
+    ``numHashTables=2``, ``seed=42``, Jaccard distance <= 0.6.
+
+    MinHashLSH keeps one hash per table and ORs the tables, so a pair
+    at token-set Jaccard s is a candidate with probability
+    1-(1-s)^2 (pinned on a planted corpus by
+    tests/test_text_similarity.py)."""
+    from pyspark.ml.feature import HashingTF, MinHashLSH
+
+    toks = docs.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("tokens"))
+    tf = HashingTF(inputCol="tokens", outputCol="features", numFeatures=1 << 18, binary=True)
+    feat = tf.transform(toks)
+    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=2, seed=42)
+    model = lsh.fit(feat)
+    return (
+        model.approxSimilarityJoin(feat, feat, threshold=0.6, distCol="jaccard_dist")
+        .select(
+            F.col("datasetA.doc_id").alias("doc_a"),
+            F.col("datasetB.doc_id").alias("doc_b"),
+        )
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .distinct()
+    )
+
+
 @gate_query(
     "text_minhash_mllib",
     oracle=f"""
@@ -447,25 +474,10 @@ def text_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1) because the OR-construction was already admitting ~everything
     — exactly the API property this gate documents. Measured
     26.1 → 3.8 s on the candidate stage (sweep, same window)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
     from big_data_flight_spark.operators.text import text_near_dedup_jaccard
 
     docs = table(spark, sf_dir, "documents").repartition(32, "doc_id")
-    toks = docs.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("tokens"))
-    tf = HashingTF(inputCol="tokens", outputCol="features", numFeatures=1 << 18, binary=True)
-    feat = tf.transform(toks)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=2, seed=42)
-    model = lsh.fit(feat)
-    pairs = (
-        model.approxSimilarityJoin(feat, feat, threshold=0.6, distCol="jaccard_dist")
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
+    pairs = mllib_minhash_candidates(docs)
     # truth is read twice below (count + broadcast build): materialize
     # the shingle-Jaccard pipeline ONCE (bounded: true near-dup pairs).
     truth = (
@@ -479,8 +491,9 @@ def text_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and its n_candidates sum was DROPPED by the final select anyway.
     # Both sides are distinct (doc_a < doc_b) pair sets, so
     # |intersection| = count of candidates surviving a LEFT SEMI join
-    # against the BROADCAST truth: the candidate side streams with no
-    # exchange. n_true_pairs counts truth alone. Same two output values
+    # against the BROADCAST truth, so the semi-join adds no exchange on
+    # the candidate side; the candidates' own .distinct() exchange
+    # remains. n_true_pairs counts truth alone. Same two output values
     # (n_recalled = the full-outer's sum(is_cand AND is_truth) since
     # both inputs are duplicate-free), no candidate-sized shuffle.
     # COUNT over zero rows is 0 (never NULL), matching the oracle's

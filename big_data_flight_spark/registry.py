@@ -112,10 +112,6 @@ def _load_all_operator_modules() -> None:
     import big_data_flight_spark.sources.connectors  # noqa: F401
     import big_data_flight_spark.streaming.twins  # noqa: F401
 
-    # MUST be last: delegating aliases that rotate high-risk gates into
-    # the driver's alphabetical correctness window (module docstring).
-    import big_data_flight_spark.operators.aliases  # noqa: F401
-
 
 def all_queries() -> dict[str, Builder]:
     _load_all_operator_modules()

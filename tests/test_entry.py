@@ -37,14 +37,6 @@ def test_registry_integrity(spark):
         assert callable(fn), name
 
 
-def test_every_query_runs_at_smoke_scale(spark):
-    """Every registered gate query must at least execute at sf0.001."""
-    mod = _entry_module()
-    for name, fn in mod.queries().items():
-        df = fn(spark, SF_SMOKE)
-        assert df.limit(1).count() >= 0, name
-
-
 def _complex_fields(schema) -> list[str]:
     from pyspark.sql.types import ArrayType, MapType, StructType
 
@@ -53,22 +45,27 @@ def _complex_fields(schema) -> list[str]:
     ]
 
 
-def test_no_complex_output_columns(spark):
-    """No gate may return an array/map/struct column. The driver
-    canonicalizes every result with a pandas ``sort_values`` over all
-    columns, which factorizes object columns — an unhashable cell
-    (numpy.ndarray from array<...>) raises TypeError and the gate
+def test_every_query_runs_at_smoke_scale(spark):
+    """Every registered gate query must execute at sf0.001 and return
+    no array/map/struct column. Each gate is built once; its schema is
+    checked before it runs.
+
+    The driver canonicalizes every result with a pandas ``sort_values``
+    over all columns, which factorizes object columns — an unhashable
+    cell (numpy.ndarray from array<...>) raises TypeError and the gate
     errors out even when the values are exactly right. This is how
-    round 3's only red row shipped (a0_sim_quantize_int8,
+    round 3's only red row shipped (sim_quantize_int8,
     CORRECTNESS_r03.json) while compare.py showed 179/179 green.
     String-render complex values instead (agg_collect convention,
     operators/aggregates.py) and keep a numeric checksum column."""
     mod = _entry_module()
     offenders = {}
     for name, fn in mod.queries().items():
-        bad = _complex_fields(fn(spark, SF_SMOKE).schema)
+        df = fn(spark, SF_SMOKE)
+        bad = _complex_fields(df.schema)
         if bad:
             offenders[name] = bad
+        assert df.limit(1).count() >= 0, name
     assert not offenders, (
         f"complex-typed output columns crash the driver canonicalizer: {offenders}"
     )

@@ -115,16 +115,6 @@ def test_no_gate_is_annotated_expected_empty():
     assert annotated == [], annotated
 
 
-def test_aliases_propagate_expected_empty():
-    """The a0_ delegation copies the annotation, so an annotated gate
-    rotating into the driver window keeps its guard semantics."""
-    _load_all_operator_modules()
-    for name, q in _REGISTRY.items():
-        if name.startswith("a0_"):
-            target = _REGISTRY[name.removeprefix("a0_")]
-            assert q.expected_empty == target.expected_empty, name
-
-
 def test_split_leakage_simhash_leak_path_exercised(spark):
     """The second leakage modality (VERDICT r7 #6) must be EXERCISED,
     not vacuous: the fixture's simhash pair relation straddles the

@@ -175,11 +175,8 @@ def test_sliced_proxy_twins_are_green_in_committed_artifact():
     )
     from tools.compare import SLICED_PROXY_SF01
 
-    # every mapped original (and any alias of it) that appears in the
-    # artifact must be proxied, and every twin must be green
-    assert set(SLICED_PROXY_SF01) <= {
-        n.removeprefix("a0_") for n in proxy
-    } | set(proxy)
+    # every mapped original must be proxied, and every twin must be green
+    assert set(SLICED_PROXY_SF01) <= set(proxy)
     for name, rec in proxy.items():
         assert rec["twin_status"] == "OK", (name, rec)
         assert art["statuses"].get(rec["twin"]) == "OK", (name, rec)
@@ -189,12 +186,8 @@ def test_sliced_proxy_twins_are_green_in_committed_artifact():
     assert art.get("skipped", {}) == {}, art.get("skipped")
     audit = art.get("rows_audit")
     assert audit, "sf0.1 artifact missing rows_audit (pre-r10 stamp?)"
-    assert any(
-        n.removeprefix("a0_") == "text_minhash_mllib"
-        and rec["status"] == "ROWS_AUDIT_OK"
-        and rec["rows"] > 0
-        for n, rec in audit.items()
-    ), audit
+    rec = audit.get("text_minhash_mllib")
+    assert rec and rec["status"] == "ROWS_AUDIT_OK" and rec["rows"] > 0, audit
 
 
 # ---------------------------------------------------------------------------

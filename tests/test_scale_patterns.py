@@ -29,48 +29,20 @@ def test_oracle_parity_smoke(spark, duck, name):
     assert r["status"] in ("OK", "WEAK_OK"), r
 
 
-def test_new_gates_are_aliased_into_driver_window():
-    """Brand-new-gate rule, rotation-aware: every CURRENT
-    _NEW_GATE_ALIASES target must land inside the driver's 50-name
-    alphabetical window (the r5-session-2 NEW_GATES list above was
-    that round's instance; the alias window rotates per round, so
-    this asserts the live registration instead of a frozen list)."""
-    from big_data_flight_spark.operators.aliases import (
-        _DEFERRED_TO_NEXT_ROTATION,
-        _NEW_GATE_ALIASES,
-    )
-
-    _load_all_operator_modules()
-    window = sorted(_REGISTRY)[:50]
-    # _NEW_GATE_ALIASES may be legitimately empty early in a round
-    # (before any gate is born); the ledger test below still forces
-    # every newcomer into alias-or-defer the moment it registers.
-    for alias, target in _NEW_GATE_ALIASES.items():
-        assert target in _REGISTRY
-        assert alias in window
-    for target in _DEFERRED_TO_NEXT_ROTATION:
-        assert target in _REGISTRY
-
-
 def test_every_gate_is_consciously_registered():
-    """The teeth behind the brand-new-gate rule (an r6 review finding:
-    a live-only check lets an unlisted newcomer slip through): the
-    committed tests/known_gates.txt ledger must exactly equal the
-    distinct registry. Adding a gate therefore forces a ledger edit,
-    and the failure message states the alias-or-defer obligation."""
+    """The committed tests/known_gates.txt ledger must exactly equal
+    the registry, so adding or removing a gate forces a ledger edit."""
     import os
 
     _load_all_operator_modules()
     ledger_path = os.path.join(os.path.dirname(__file__), "known_gates.txt")
     with open(ledger_path) as fh:
         known = {line.strip() for line in fh if line.strip()}
-    names = {n for n in _REGISTRY if not n.startswith("a0_")}
+    names = set(_REGISTRY)
     unknown = names - known
     assert not unknown, (
         f"gates {sorted(unknown)} are not in tests/known_gates.txt — add "
-        "them to the ledger AND either alias them into the driver window "
-        "(_NEW_GATE_ALIASES) or list them in _DEFERRED_TO_NEXT_ROTATION "
-        "(operators/aliases.py)"
+        "them to the ledger"
     )
     stale = known - names
     assert not stale, f"ledger entries {sorted(stale)} no longer registered"
@@ -381,54 +353,3 @@ def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
         if u1 < 64 or u0 > 160 or d1 < 80 or d0 > 170
     )
     assert skippable >= 4, boxes
-
-
-def test_r12_window_purges_remaining_stale_rows():
-    """The r12 rotation contract — the FINAL step of the committed
-    purge schedule (VERDICT r11 #1: "the 48 remaining r6-row gates;
-    newcomers ≤2") — pinned against the round-start mechanical audit
-    snapshot (tools/staleness.py -> stale_rows_r12.json, 48 stale, all
-    r6-cohort): EVERY remaining stale gate must be aliased into the
-    50-name window (newcomers displace the steady-state slot first,
-    then r6 reverse-alphabetical), the spare slots go to the
-    steady-state head start (oldest FRESH cohort = r7, alphabetically
-    first within it: agg_bitmap_rolling_distinct), and the window
-    stays exactly 50. The r10/r11 pins live in git history alongside
-    their snapshots (stale_rows_r1{0,1}.json stay committed as the
-    audit trail); this test always pins the LIVE window against the
-    LIVE round's snapshot."""
-    import json
-    import os
-
-    from big_data_flight_spark.operators.aliases import _ALIASES, _NEW_GATE_ALIASES
-
-    snap_path = os.path.join(os.path.dirname(__file__), "stale_rows_r12.json")
-    with open(snap_path) as fh:
-        snap = json.load(fh)["stale"]
-    assert all(r == 6 for r in snap.values()), "r12 backlog must be pure r6"
-    r6_sorted = sorted(snap)
-    targets = set(_ALIASES.values()) | set(_NEW_GATE_ALIASES.values())
-    n_newcomers = len(_NEW_GATE_ALIASES)
-    assert n_newcomers <= 2, "newcomer production is capped at 2 in r12"
-    # STRICT purge order: newcomers displace the steady-state slot
-    # FIRST (1 spare slot with 48 stale + 50-name window), so r6
-    # displacement only begins at the 2nd newcomer — and then strictly
-    # reverse-alphabetical from the cohort tail.
-    missing_r6 = sorted(set(r6_sorted) - targets)
-    # 50 slots - 48 stale = 2 spare; slot 50 is the steady-state pick,
-    # slot 49 the first newcomer. A 2nd newcomer evicts the steady-
-    # state pick; only a 3rd (forbidden above) would touch r6 rows.
-    assert not missing_r6, (
-        "FINAL purge step: every remaining r6-cohort gate must be in "
-        f"the r12 window; missing: {missing_r6}"
-    )
-    # the steady-state slot: any aliased target that is neither stale
-    # nor a newcomer must be the documented oldest-fresh-cohort pick,
-    # and is present only while newcomers leave it room
-    extras = sorted(targets - set(r6_sorted) - set(_NEW_GATE_ALIASES.values()))
-    expected_extras = ["agg_bitmap_rolling_distinct"] if n_newcomers <= 1 else []
-    assert extras == expected_extras, (
-        f"steady-state slot mismatch: got {extras}, expected {expected_extras}"
-    )
-    # window stays exactly 50
-    assert len(_ALIASES) + len(_NEW_GATE_ALIASES) == 50

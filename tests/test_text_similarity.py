@@ -444,3 +444,42 @@ def test_bpe_tiebreak_is_lexicographic(spark):
     finally:
         text_mod.table = orig
     assert (r1.sym_a, r1.sym_b, r1.pair_count) == ("x", "y", 2)
+
+
+def test_mllib_minhash_recall_margin(spark):
+    """Where text_minhash_mllib's numHashTables=2 stops holding its
+    >=0.95 recall audit. MinHashLSH ORs two single-hash tables, so a
+    pair at token-set Jaccard s is a candidate with P = 1-(1-s)^2,
+    which crosses 0.95 at s = 1 - sqrt(0.05) ~ 0.776. Planted pairs at
+    six levels (shared k of 40 union tokens, vocabularies disjoint
+    across pairs) must track that curve: the audit holds only for
+    near-dup pairs at s >= 0.8, and fails by s = 0.7 (measured 0.757,
+    0.807, 0.907, 0.963, 0.993, 1.0 at s = 0.5 ... 1.0)."""
+    from big_data_flight_spark.operators.sketches import mllib_minhash_candidates
+
+    union = 40
+    levels = [20, 24, 28, 32, 36, 40]  # shared tokens k -> s = k / 40
+    n_pairs = 300
+    rows, pair_level, pid = [], {}, 0
+    for k in levels:
+        own = (union - k) // 2
+        for _ in range(n_pairs):
+            shared = [f"p{pid}s{i}" for i in range(k)]
+            rows.append((2 * pid, " ".join([f"p{pid}a{i}" for i in range(own)] + shared)))
+            rows.append((2 * pid + 1, " ".join([f"p{pid}b{i}" for i in range(own)] + shared)))
+            pair_level[pid] = k
+            pid += 1
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    cands = {(r["doc_a"], r["doc_b"]) for r in mllib_minhash_candidates(docs).collect()}
+
+    hits = dict.fromkeys(levels, 0)
+    for p, k in pair_level.items():
+        if (2 * p, 2 * p + 1) in cands:
+            hits[k] += 1
+    assert len(cands) == sum(hits.values()), "disjoint-vocab pairs must never pass"
+    recall = {k / union: hits[k] / n_pairs for k in levels}
+    for s, emp in recall.items():
+        pred = 1 - (1 - s) ** 2
+        assert abs(emp - pred) <= 0.05, f"s={s}: pred={pred:.3f} emp={emp:.3f}"
+    assert all(emp >= 0.95 for s, emp in recall.items() if s >= 0.8), recall
+    assert all(emp < 0.95 for s, emp in recall.items() if s <= 0.7), recall

@@ -72,7 +72,7 @@ def canon(df: pd.DataFrame) -> list[tuple]:
 def driver_canon(df: pd.DataFrame) -> None:
     """Replicate the DRIVER's canonicalization verbatim: a pandas
     ``sort_values`` over all columns. Round 3's only driver-red row
-    (a0_sim_quantize_int8) crashed inside this exact call — pandas
+    (sim_quantize_int8) crashed inside this exact call — pandas
     factorizes object columns for lexsort, and an unhashable cell
     (numpy.ndarray from an array<...> output column) raises TypeError
     — while this harness's home-grown tuple canonicalization sailed
@@ -161,8 +161,7 @@ def compare_one(spark, con, name: str, q, sf_dir: str, verbose: bool = True) -> 
 # the shared recursive cluster oracle ~25 min — it pairs all docs with
 # list_intersect before the reachability recursion), so they are
 # compared at sf0.01 only. The two cluster gates share ONE oracle
-# object; both names are listed for explicitness, and the identity
-# match below also catches their a0_ aliases.
+# object, so both names are listed.
 SLOW_ORACLE_AT_SF01 = {
     "text_near_dedup_jaccard",
     "text_minhash_mllib",
@@ -230,31 +229,14 @@ def main(argv: list[str]) -> int:
     proxied: dict[str, str] = {}
     rows_audit: list[str] = []
     if sf_dir.rstrip("/").endswith("sf0.1"):
-        # Match by ORACLE identity, not name: a0_* delegation aliases
-        # share the target's oracle object, so they must skip too.
-        slow_oracles = {
-            _REGISTRY[n].oracle for n in SLOW_ORACLE_AT_SF01 if n in _REGISTRY
-        }
-        # Proxy resolution: exact name first (the two cluster gates
-        # SHARE one oracle object, so an oracle-identity lookup alone
-        # would record the same twin for both — r9 review), falling
-        # back to oracle identity so a0_* aliases of a proxied gate
-        # inherit its sliced twin.
-        proxy_by_oracle = {
-            _REGISTRY[n].oracle: t
-            for n, t in SLICED_PROXY_SF01.items()
-            if n in _REGISTRY
-        }
         for n in names:
-            if _REGISTRY[n].oracle not in slow_oracles:
+            if n not in SLOW_ORACLE_AT_SF01:
                 continue
-            twin = SLICED_PROXY_SF01.get(
-                n.removeprefix("a0_")
-            ) or proxy_by_oracle.get(_REGISTRY[n].oracle)
+            twin = SLICED_PROXY_SF01.get(n)
             if twin is not None:
                 proxied[n] = twin
                 print("PRXY " + n.ljust(28) + f"SLICED_PROXY:{twin}", flush=True)
-            elif n.removeprefix("a0_") in ROWS_AUDIT_SF01:
+            elif n in ROWS_AUDIT_SF01:
                 rows_audit.append(n)
                 print("AUDT " + n.ljust(28) + "ROWS_AUDIT_SF01", flush=True)
             else:
@@ -278,7 +260,7 @@ def main(argv: list[str]) -> int:
     row_counts: dict[str, int] = {}
     audited: dict[str, dict] = {}
     for n in rows_audit:
-        col = ROWS_AUDIT_SF01[n.removeprefix("a0_")]
+        col = ROWS_AUDIT_SF01[n]
         rows = _REGISTRY[n].builder(spark, sf_dir).collect()
         ok = len(rows) > 0 and all(r[col] is True for r in rows)
         status = "ROWS_AUDIT_OK" if ok else "ROWS_AUDIT_FAIL"

@@ -11,10 +11,9 @@ Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/timing_sweep.py \
         [--runs 2] [--out /tmp/timing_sweep.json] [name ...]
 
-Aliases (a0_*) are skipped — they time their targets. Eager builders
-(streaming drains, iterative loops that execute in the builder) are
-timed builder-inclusive per run, same convention as bench.py's
-EAGER_BUILDERS / panel-2.
+Eager builders (streaming drains, iterative loops that execute in the
+builder) are timed builder-inclusive per run, same convention as
+bench.py's EAGER_BUILDERS / panel-2.
 """
 
 from __future__ import annotations
@@ -42,9 +41,7 @@ def main() -> int:
     _load_all_operator_modules()
     spark = get_session("timing_sweep")
 
-    names = args.names or sorted(
-        n for n in _REGISTRY if not n.startswith("a0_")
-    )
+    names = args.names or sorted(_REGISTRY)
     out: dict[str, dict] = {}
     for i, name in enumerate(names):
         q = _REGISTRY[name]
