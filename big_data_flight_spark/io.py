@@ -5,7 +5,10 @@ star schema (region→nation→{customer,supplier}, part, orders→lineitem),
 an append-only ``events`` stream table, a ``documents`` text corpus and
 an ``embeddings`` vector store. Parquet is self-describing, so loaders
 trust the footers — no schema inference, no casts at scan time (casting
-at scan would defeat parquet predicate pushdown).
+at scan would defeat parquet predicate pushdown). Each file's footer is
+read once per file version (``footer_schema``): without a schema Spark
+starts a one-task footer-reading job on every ``spark.read.parquet``
+call, so later reads pass the memoized schema and start no job.
 
 Scale note: each table is one parquet file at fixture scale; at 100 TB
 these become partitioned directories. ``table()`` takes any path Spark
@@ -15,8 +18,12 @@ pushdown come from Catalyst for free when filters are declarative.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -35,6 +42,37 @@ TABLES = (
 # slowly or not at all with sf); used by join builders as hint targets.
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
 
+# Footer-schema memo: path -> ((st_ino, st_size, st_mtime_ns), schema).
+# Fixtures have been regenerated with different physical types once
+# already (events.ts ns -> µs ntz), so a regenerated file gets a new
+# stat key, misses, and has its footer read again.
+_SCHEMA_MEMO: dict[str, tuple[tuple[int, int, int], StructType]] = {}
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark infers from one parquet file's footer, read
+    once per file version. Only the schema is memoized, never a
+    DataFrame: each read must still get fresh attribute IDs, or a
+    self-join of two reads of one table is ambiguous (tpch_q21's
+    lineitem l1/l2/l3).
+
+    Returns None for a path that is not a regular local file (a URI,
+    or a partitioned directory at scale); callers read those as
+    Spark would without a schema."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    key = (st.st_ino, st.st_size, st.st_mtime_ns)
+    hit = _SCHEMA_MEMO.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMA_MEMO[path] = (key, schema)
+    return schema
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. SURVEY.md §2.1 `scan_parquet`.
@@ -51,7 +89,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name == "events":
         df = ts_guard(df)
     return df

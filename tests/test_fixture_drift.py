@@ -64,26 +64,94 @@ def test_events_stream_guards_ts_to_ltz(spark, tmp_path, unit):
     assert [(r.us, r["count"]) for r in out] == [(_US, 2)]
 
 
-def test_schema_memo_invalidates_on_fixture_swap(spark, tmp_path):
-    """A mid-process fixture regeneration (new mtime/size, different
+def _read_table(spark, sf_dir):
+    from big_data_flight_spark.io import table
+
+    df = table(spark, sf_dir, "events")
+    return df.dtypes, df.selectExpr("unix_micros(ts) AS us").collect()
+
+
+def _read_stream(spark, sf_dir):
+    from big_data_flight_spark.streaming.twins import events_stream, run_to_memory
+
+    sdf = events_stream(spark, sf_dir)
+    rows = run_to_memory(
+        sdf.select("event_id", "ts"), mode="append"
+    ).selectExpr("unix_micros(ts) AS us").collect()
+    return sdf.dtypes, rows
+
+
+@pytest.mark.parametrize("read", [_read_table, _read_stream], ids=["table", "stream"])
+def test_schema_memo_invalidates_on_fixture_swap(spark, tmp_path, read):
+    """A mid-process fixture regeneration (new stat key, different
     physical type) must MISS the footer-schema memo and re-read —
-    never stream with the stale schema (ADVICE r3)."""
-    from big_data_flight_spark.streaming.twins import events_stream
+    never scan or stream with the stale schema (ADVICE r3). Both
+    readers share io's one memo."""
+    from big_data_flight_spark.io import _SCHEMA_MEMO
 
     _write_events(str(tmp_path), "ns")
-    first = dict(events_stream(spark, str(tmp_path)).dtypes)["ts"]
+    dtypes, _ = read(spark, str(tmp_path))
+    first = dict(dtypes)["ts"]
     _write_events(str(tmp_path), "us")  # simulated driver regen
-    second = dict(events_stream(spark, str(tmp_path)).dtypes)["ts"]
+    dtypes, rows = read(spark, str(tmp_path))
+    second = dict(dtypes)["ts"]
     # both guarded to LTZ, but the second MUST have re-read the footer:
     # an ns-long stale schema applied to a µs file would misread values.
     assert first == second == "timestamp"
-    from big_data_flight_spark.streaming.twins import _SCHEMA_MEMO
+    assert {r.us for r in rows} == {_US}, "stale ns schema misread µs values"
 
     path = os.path.join(str(tmp_path), "events.parquet")
     assert path in _SCHEMA_MEMO
     # memoized schema must be the µs one (TimestampNTZ), not ns int64
     memo_schema = _SCHEMA_MEMO[path][1]
     assert "timestamp" in memo_schema["ts"].dataType.typeName()
+
+
+def test_warm_table_read_starts_no_job(spark, tmp_path):
+    """The first io.table read of a file infers its schema from the
+    footer (one Spark job); a second read of the unchanged file reuses
+    the memoized schema and starts no job at all — the driver-side
+    cost gate builders pay on every call."""
+    from big_data_flight_spark.io import table
+
+    _write_events(str(tmp_path), "us")
+    sc = spark.sparkContext
+    group = f"warm_read_{os.getpid()}_{id(tmp_path)}"
+    sc.setJobGroup(group, "footer-schema memo probe")
+    try:
+        cold = table(spark, str(tmp_path), "events").schema
+        cold_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        warm = table(spark, str(tmp_path), "events").schema
+        warm_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert cold_jobs >= 1, "the cold read should infer the footer with a job"
+    assert warm == cold
+    assert warm_jobs == cold_jobs, "a warm read started a footer-inference job"
+
+
+def test_fixture_reads_go_through_io_table():
+    """A bare ``spark.read.parquet(f"{sf_dir}/...")`` skips the footer
+    memo and starts a footer-inference job on every call. Fixture
+    reads go through io.table; reads of files a builder has just
+    written (their own paths, not sf_dir) are not matched."""
+    import re
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)), "big_data_flight_spark")
+    bare = re.compile(r"\.read\s*\.parquet\(\s*f[\"']\{sf_dir\}/")
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for fn in files:
+            path = os.path.join(root, fn)
+            if not fn.endswith(".py") or path == os.path.join(pkg, "io.py"):
+                continue
+            with open(path) as f:
+                text = f.read()
+            for m in bare.finditer(text):
+                line = text.count("\n", 0, m.start()) + 1
+                hits.append(f"{os.path.relpath(path, pkg)}:{line}")
+    assert not hits, f"fixture reads bypass io.table: {hits}"
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
